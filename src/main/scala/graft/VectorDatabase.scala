@@ -220,9 +220,15 @@ class VectorDatabase private (
     // insert-time beam = efConstruction: hnsw's own meaning of
     // ef_construction is the candidate-list width during insertion, so
     // the append's edge-finding search honors it rather than a fixed 64
-    graphVar = graphVar.map(_.append(batch, "id", "vector",
-      k = math.max(1, manifestVar.m),
-      ef = math.max(math.max(1, manifestVar.m) + 1, manifestVar.efConstruction)))
+    // the replaced instance's broadcast adjacency is dead once the new
+    // instance exists (its cached frames live on inside the new one)
+    graphVar = graphVar.map { g =>
+      val next = g.append(batch, "id", "vector",
+        k = math.max(1, manifestVar.m),
+        ef = math.max(math.max(1, manifestVar.m) + 1, manifestVar.efConstruction))
+      g.releaseAdjacency()
+      next
+    }
     hybridCache.foreach(_.unpersist())
     hybridCache = None
   }

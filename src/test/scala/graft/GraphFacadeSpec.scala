@@ -128,6 +128,16 @@ class GraphFacadeSpec extends AnyFunSuite {
       val b = f.queryVector(q, topK = 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(a.sameElements(b))
       f.close()
+      // a tuned beam finds the appended vector itself: the new instance
+      // built its own adjacency (the replaced one's lacks id 55) and the
+      // replaced instance freed its broadcast
+      db.setEf(16)
+      val tuned = db.queryVector(q, topK = 5).collect().map(_.getLong(0))
+      assert(tuned.head == 55L, s"tuned beam missed the appended vector: ${tuned.toSeq}")
+      assert(before.adjacencyIfBuilt.isEmpty, "the replaced instance kept its adjacency")
+      val bc = after.adjacencyIfBuilt.getOrElse(fail("tuned queryVector did not run in-task"))
+      db.close()
+      intercept[org.apache.spark.SparkException](bc.value)
     } finally db.close()
   }
 }

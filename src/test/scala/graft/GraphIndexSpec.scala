@@ -1,6 +1,7 @@
 package graft
 
 import graft.vector.{ExactKNN, GraphIndex}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +15,34 @@ class GraphIndexSpec extends AnyFunSuite {
   private def queryVec(id: Long): Array[Double] =
     emb.where(emb("vec_id") === id).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble).toArray
+
+  // ---- the in-task beam against the hop-join loop ----
+
+  /** Collected rows with every double as its raw bits, so NaN, −0.0 and
+    * null compare exactly. */
+  private def exactRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    })
+
+  /** Runs `body` with the broadcast threshold at −1, which forces the
+    * hop-join loop. */
+  private def onHopJoin[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try { spark.conf.set(key, "-1"); body } finally spark.conf.set(key, prev)
+  }
+
+  /** Runs `search` on the in-task arm, then on the hop-join loop, and
+    * asserts identical rows; returns them. */
+  private def assertSameArms(idx: GraphIndex, what: String)(search: => DataFrame): Seq[Seq[Any]] = {
+    val inTask = exactRows(search)
+    assert(idx.adjacencyIfBuilt.isDefined, s"$what: the in-task arm did not run")
+    val hopJoin = onHopJoin(exactRows(search))
+    assert(inTask == hopJoin, s"$what: in-task\n$inTask\n!= hop join\n$hopJoin")
+    inTask
+  }
 
   test("build on an empty corpus fails fast with a real message (round-10 review)") {
     import spark.implicits._
@@ -278,5 +307,106 @@ class GraphIndexSpec extends AnyFunSuite {
     val got = index.search(q, 10, ef = 16, maxHops = 3).collect()
     assert(got.length == 10)
     assert(got.head.getLong(0) == 7L) // still navigates to the query itself
+  }
+
+  test("in-task beam equals the hop-join loop for every (ef, maxHops) and metric") {
+    val queries = emb.where(col("vec_id").isin(3L, 21L, 77L, 150L, 311L))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    for ((ef, hops) <- Seq((16, 3), (64, 6), (64, -1));
+         metric <- Seq(ExactKNN.L2Sq, ExactKNN.L2, ExactKNN.Cosine)) {
+      val rows = assertSameArms(index, s"ef=$ef maxHops=$hops $metric")(
+        index.searchBatch(queries, "qid", "qv", k = 10, ef = ef, maxHops = hops, metric = metric))
+      assert(rows.length == 50)
+    }
+  }
+
+  test("in-task beam equals the hop-join loop under restrict and for single-query search") {
+    val restrict = emb.where(col("vec_id") % 3 === 0).select(col("vec_id").as("id"))
+    val queries = emb.where(col("vec_id").isin(5L, 42L, 99L))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    for ((ef, hops) <- Seq((16, 3), (64, -1))) {
+      assertSameArms(index, s"restricted batch ef=$ef")(
+        index.searchBatch(queries, "qid", "qv", k = 5, ef = ef, maxHops = hops,
+          restrict = Some(restrict)))
+      assertSameArms(index, s"single query ef=$ef")(
+        index.search(queryVec(42), 10, ef = ef, maxHops = hops))
+      assertSameArms(index, s"restricted single query ef=$ef")(
+        index.search(queryVec(42), 10, ef = ef, maxHops = hops, restrict = Some(restrict)))
+    }
+  }
+
+  test("append finds the same edges on both arms, and its index searches the same on both") {
+    val base = GraphIndex.build(emb.where(col("vec_id") < 400L), "vec_id", "embedding", k = 8)
+    val batch = emb.where(col("vec_id") >= 400L)
+    val viaInTask = base.append(batch, "vec_id", "embedding")
+    assert(base.adjacencyIfBuilt.isDefined, "append's edge search did not run in-task")
+    val viaHopJoin = onHopJoin(base.append(batch, "vec_id", "embedding"))
+    def edgeSet(g: GraphIndex) =
+      g.edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(edgeSet(viaInTask) == edgeSet(viaHopJoin))
+    val queries = emb.where(col("vec_id").isin(3L, 450L, 480L))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    for ((ef, hops) <- Seq((16, 3), (64, -1)))
+      assertSameArms(viaInTask, s"appended ef=$ef")(
+        viaInTask.searchBatch(queries, "qid", "qv", k = 10, ef = ef, maxHops = hops))
+    viaHopJoin.releaseAdjacency()
+    viaInTask.dispose()
+  }
+
+  test("adversarial inputs: duplicate vectors tying at the beam and k cuts, zero/NaN/null queries") {
+    import spark.implicits._
+    // six base vectors (one all-zero), each held by five ids: every score
+    // ties five ways, so the beam and k boundaries cut through ties
+    val bases = Seq(Seq(1.0f, 0f, 0f, 0f), Seq(0f, 1f, 0f, 0f), Seq(0f, 0f, 1f, 0f),
+      Seq(1f, 1f, 0f, 0f), Seq(0.5f, 0f, 0.5f, 1f), Seq(0f, 0f, 0f, 0f))
+    val data = (0L until 30L).map(i => (i, bases((i % 6).toInt))).toDF("id", "v")
+    val idx = GraphIndex.build(data, "id", "v", k = 3, nlist = 1)
+    val queries = Seq[(Long, Seq[Double])](
+      (0L, Seq(1.0, 0.0, 0.0, 0.0)),            // equals base 0: five ties at 1.0
+      (1L, Seq(0.5, 0.5, 0.0, 0.0)),            // halfway between bases 0 and 1
+      (2L, Seq(0.0, 0.0, 0.0, 0.0)),            // all-zero: cosine NaN everywhere
+      (3L, Seq(0.2, Double.NaN, 0.1, 0.0)),     // NaN: every score NaN
+      (4L, null)                                // null vector: every score null
+    ).toDF("qid", "qv")
+    for ((k, ef) <- Seq((3, 3), (2, 4), (4, 1));
+         metric <- Seq(ExactKNN.L2Sq, ExactKNN.Cosine))
+      assertSameArms(idx, s"k=$k ef=$ef $metric")(
+        idx.searchBatch(queries, "qid", "qv", k = k, ef = ef, maxHops = 4, metric = metric))
+    idx.dispose()
+  }
+
+  test("adversarial sizes: a 1-node graph, and k and beam larger than the corpus") {
+    import spark.implicits._
+    val one = GraphIndex.build(Seq((7L, Seq(0.3f, 0.4f))).toDF("id", "v"), "id", "v",
+      k = 2, nlist = 1)
+    val q2 = Seq((1L, Seq(0.0, 1.0)), (2L, Seq(0.3, 0.4))).toDF("qid", "qv")
+    val single = assertSameArms(one, "1-node graph")(
+      one.searchBatch(q2, "qid", "qv", k = 3, ef = 8))
+    assert(single.map(_(1)) == Seq(7L, 7L))
+    one.dispose()
+    val rnd = new scala.util.Random(11)
+    val ten = GraphIndex.build(
+      (0L until 10L).map(i => (i * 3, Seq.fill(4)(rnd.nextFloat()))).toDF("id", "v"),
+      "id", "v", k = 2, nlist = 1)
+    val q4 = Seq((1L, Seq(0.5, 0.5, 0.5, 0.5)), (2L, Seq(1.0, 0.0, 0.0, 0.0))).toDF("qid", "qv")
+    val all = assertSameArms(ten, "k > n, beam > n")(
+      ten.searchBatch(q4, "qid", "qv", k = 15, ef = 50))
+    assert(all.length == 20, "k > n and beam > n return every node per query")
+    ten.dispose()
+  }
+
+  test("dispose destroys the broadcast adjacency") {
+    import spark.implicits._
+    val data = (0L until 32L).map(i => (i, Seq.fill(4)(math.cos(i.toDouble)))).toDF("id", "v")
+    val idx = GraphIndex.build(data, "id", "v", k = 4, nlist = 1)
+    assert(idx.adjacencyIfBuilt.isEmpty, "the adjacency is built lazily")
+    idx.search(Array(0.1, 0.2, 0.3, 0.4), 3, ef = 8).collect()
+    val bc = idx.adjacencyIfBuilt.getOrElse(fail("tuned search did not build the adjacency"))
+    assert(bc.value.ids.length == 32)
+    // graphCache eviction and VectorDatabase.invalidate/close all free
+    // the index through dispose
+    idx.dispose()
+    assert(idx.adjacencyIfBuilt.isEmpty)
+    intercept[org.apache.spark.SparkException](bc.value)
   }
 }
