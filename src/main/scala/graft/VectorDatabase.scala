@@ -209,7 +209,13 @@ class VectorDatabase private (
     * differential-spec-pinned, at cost ∝ |batch| + |vocabulary|. Indexes
     * not yet built stay unbuilt (lazy build sees the whole corpus later). */
   private def adoptBatch(batch: DataFrame): Unit = {
-    bm25Var = bm25Var.map(_.append(batch, "id", "doc"))
+    // like the graph's adjacency below, the replaced text index's
+    // broadcast compact form is dead once the appended instance exists
+    bm25Var = bm25Var.map { b =>
+      val next = b.append(batch, "id", "doc")
+      b.releaseCompact()
+      next
+    }
     ivfVar = ivfVar.map(_.appendAssign(batch, "id", "vector"))
     pqVar = pqVar.map(_.append(batch, "id", "vector"))
     // residual append: nearest TRAINED centroid + existing codebooks; the
@@ -240,6 +246,7 @@ class VectorDatabase private (
   private[graft] def rpqIfBuilt: Option[ResidualPQ] = rpqVar
   private[graft] def lshIfBuilt: Option[LSHIndex] = lshVar
   private[graft] def graphIfBuilt: Option[graft.vector.GraphIndex] = graphVar
+  private[graft] def bm25IfBuilt: Option[BM25.Index] = bm25Var
 
   // ---------------------------------------------------------------------
   // S2 add — batch insert with dense-id append (ldb:56–113)
@@ -622,15 +629,24 @@ class VectorDatabase private (
     * ldb:359–374), per-query max-normalize (ldb:381–384), weighted
     * fusion, zero-drop (ldb:399–401), top-k.
     *
-    * Scale shape: the text side is the frames-path sparse BM25
-    * ([[BM25.Index.scoreBatchFrames]] — no query-proportional driver
-    * state); the vector side is produced dense corpus-side with the
-    * |Q|-row query frame BROADCAST, so the only fact-sized shuffle is
-    * the ONE (qid, id) score join that fuses them. The per-query maxes
-    * are a |Q|-row aggregate (map-side partial combine) broadcast back —
-    * the scalable analog of a per-query window, which would funnel each
-    * query's whole corpus through one partition. The final cut is the
-    * bounded-heap [[graft.plans.TopKPerKey]].
+    * The vector side is produced corpus-side with the |Q|-row query
+    * frame BROADCAST (see [[hybridPool]]); the fused (qid, id, score)
+    * pool then takes one of two arms with the same rows:
+    *  - IN-TASK, when the text index's compact form fits
+    *    `spark.sql.autoBroadcastJoinThreshold` (−1 disables it, as for
+    *    joins; [[BM25.Index.compactIfFits]]): one stage groups each
+    *    query's vector candidates with its query row by qid, scores
+    *    BM25 from the broadcast index, merges both sides with 0-fill,
+    *    takes the per-query maxes and fuses. No text-side join, no pair
+    *    frame, no persist.
+    *  - RELATIONAL otherwise: the frames-path sparse BM25
+    *    ([[BM25.Index.scoreBatchFrames]]) meets the vector side in ONE
+    *    (qid, id) score join, persisted in [[hybridCache]]; the
+    *    per-query maxes are a |Q|-row aggregate broadcast back — the
+    *    scalable analog of a per-query window, which would funnel each
+    *    query's whole corpus through one partition.
+    * Both feed the same tail: `filter` and `restrict` semi-joins,
+    * zero-drop, the bounded-heap [[graft.plans.TopKPerKey]].
     * Output: (qid, id, score), qid asc, score desc, id-asc ties. */
   def hybridSearchBatch(queries: DataFrame, qidCol: String, textCol: String,
                         vecCol: String, topK: Int = 5,
@@ -640,58 +656,8 @@ class VectorDatabase private (
                         exactThreshold: Long = 1000L,
                         restrict: Option[DataFrame] = None): DataFrame = {
     if (nRows == 0) return emptyBatchResult // ldb:346–347, per query
-    val q = queries.select(col(qidCol).cast("long").as("qid"),
-      col(textCol).as("__qtext"), col(vecCol).cast("array<double>").as("__qv"))
-    val ts = bm25.scoreBatchFrames(q, "qid", "__qtext")
-      .withColumnRenamed("score", "ts")
-    val exactArm = nRows <= exactThreshold
-    val vs =
-      if (exactArm)
-        // small-N exact arm: true-L2 scores for every (query, doc) pair —
-        // corpus scan × broadcast queries, no shuffle (ldb:375–378)
-        df.select(col("id"), col("vector"))
-          .crossJoin(broadcast(q.select(col("qid"), col("__qv"))))
-          .select(col("qid"), col("id"),
-            ExactKNN.L2.score(ExactKNN.L2.dist(col("vector"), col("__qv"))).as("vs"))
-      else {
-        // widened index probe (ldb:361–374): squared-L2 score discipline,
-        // k = max(10·topK, 100) per query. The reference's dense
-        // zero-scatter (ldb:365–374) is NOT materialized: a (qid, id)
-        // pair absent from both the probe and the sparse BM25 frame has
-        // fused score 0 and always dies at the K10 zero-drop, and maxes
-        // over non-negative scores are unchanged by 0-fill — so the
-        // sparse full-outer join below is bit-identical at k·|Q| + text
-        // pairs instead of N×|Q| rows (r9 VERDICT #1: the dense scatter
-        // defeats the probe's purpose at scale).
-        val widened = math.min(nRows, math.max(10L * topK, 100L)).toInt
-        searchTopKBatch(q.select(col("qid"), col("__qv")), widened)
-          .withColumnRenamed("score", "vs")
-          .select(col("qid"), col("id"), col("vs"))
-      }
-    // the ONE fact-sized score join: exact arm = sparse text scores into
-    // dense vector pairs (left); probe arm = sparse ∪ sparse (full outer) —
-    // misses on either side restored to the dense contract's 0.0
-    hybridCache.foreach(_.unpersist(blocking = false))
-    val joined0 =
-      if (exactArm)
-        vs.join(ts, Seq("qid", "id"), "left")
-          .select(col("qid"), col("id"),
-            coalesce(col("ts"), lit(0.0)).as("ts"), col("vs"))
-      else
-        vs.join(ts, Seq("qid", "id"), "full_outer")
-          .select(col("qid"), col("id"),
-            coalesce(col("ts"), lit(0.0)).as("ts"),
-            coalesce(col("vs"), lit(0.0)).as("vs"))
-    val joined = joined0.persist(StorageLevel.MEMORY_AND_DISK)
-    hybridCache = Some(joined) // released on the next hybrid call / add
-    val maxes = joined.groupBy(col("qid"))
-      .agg(max(col("ts")).as("__tm"), max(col("vs")).as("__vm"))
-    val fused = joined.join(broadcast(maxes), Seq("qid"))
-      .select(col("qid"), col("id"),
-        (lit(vectorWeight) *
-           when(col("__vm") > 0, col("vs") / col("__vm")).otherwise(col("vs")) +
-         lit(1.0 - vectorWeight) *
-           when(col("__tm") > 0, col("ts") / col("__tm")).otherwise(col("ts"))).as("score"))
+    val fused = hybridPool(queries, qidCol, textCol, vecCol, topK, vectorWeight,
+      exactThreshold)
     val globalMasked = filter match {
       case Some(p) => fused.join(df.where(p).select(col("id")), Seq("id"), "left_semi")
       case None => fused
@@ -714,6 +680,93 @@ class VectorDatabase private (
       .select(col("qid"), col("id"), col("score"))
       .orderBy(col("qid").asc, col("score").desc, col("id").asc)
     if (returnScores) r else r.select(col("qid"), col("id"))
+  }
+
+  /** [[hybridSearchBatch]]'s fused (qid, id, score) pool, before any mask
+    * or cut: every (query, doc) pair with a vector candidate score or a
+    * text match (all docs on the exact arm), scored
+    * w·(vs/vm) + (1−w)·(ts/tm) with the per-query maxes taken over that
+    * 0-filled pool. */
+  private[graft] def hybridPool(queries: DataFrame, qidCol: String, textCol: String,
+                                vecCol: String, topK: Int, vectorWeight: Double,
+                                exactThreshold: Long): DataFrame = {
+    val q = queries.select(col(qidCol).cast("long").as("qid"),
+      col(textCol).as("__qtext"), col(vecCol).cast("array<double>").as("__qv"))
+    val exactArm = nRows <= exactThreshold
+    val vs =
+      if (exactArm)
+        // small-N exact arm: true-L2 scores for every (query, doc) pair —
+        // corpus scan × broadcast queries, no shuffle (ldb:375–378)
+        df.select(col("id"), col("vector"))
+          .crossJoin(broadcast(q.select(col("qid"), col("__qv"))))
+          .select(col("qid"), col("id"),
+            ExactKNN.L2.score(ExactKNN.L2.dist(col("vector"), col("__qv"))).as("vs"))
+      else {
+        // widened index probe (ldb:361–374): squared-L2 score discipline,
+        // k = max(10·topK, 100) per query. The reference's dense
+        // zero-scatter (ldb:365–374) is NOT materialized: a (qid, id)
+        // pair absent from both the probe and the sparse BM25 side has
+        // fused score 0 and always dies at the K10 zero-drop, and maxes
+        // over non-negative scores are unchanged by 0-fill — so the
+        // sparse union below is bit-identical at k·|Q| + text pairs
+        // instead of N×|Q| rows (r9 VERDICT #1: the dense scatter
+        // defeats the probe's purpose at scale). The candidates'
+        // (qid, score, id) order is dropped: both arms regroup them by
+        // qid, so the source's final sort would cost a sampling job and a
+        // range shuffle for nothing.
+        val widened = math.min(nRows, math.max(10L * topK, 100L)).toInt
+        org.apache.spark.sql.GraftColumnBridge.unordered(
+            searchTopKBatch(q.select(col("qid"), col("__qv")), widened))
+          .withColumnRenamed("score", "vs")
+          .select(col("qid"), col("id"), col("vs"))
+      }
+    hybridCache.foreach(_.unpersist(blocking = false))
+    hybridCache = None
+    val text = bm25
+    text.compactIfFits() match {
+      case Some(compact) =>
+        // one row per query: its candidates and its text(s), then the
+        // whole fusion in the task that holds them
+        val cand = StructType(Seq(StructField("id", LongType), StructField("vs", DoubleType)))
+        val fuse = udf(new HybridFuse(compact, vectorWeight, exactArm))
+        vs.select(col("qid"),
+            struct(col("id").cast("long").as("id"), col("vs").cast("double").as("vs")).as("__c"),
+            lit(null).cast(StringType).as("__qtext"))
+          .unionByName(q.select(col("qid"), lit(null).cast(cand).as("__c"),
+            col("__qtext").cast(StringType).as("__qtext")))
+          .groupBy(col("qid"))
+          .agg(collect_list(col("__c")).as("__c"), collect_list(col("__qtext")).as("__qtext"))
+          .where(col("qid").isNotNull) // a null qid joins nothing on the relational arm
+          .select(col("qid"), explode(fuse(col("__c"), col("__qtext"))).as("__f"))
+          .select(col("qid"), col("__f._1").as("id"), col("__f._2").as("score"))
+      case None =>
+        val ts = text.scoreBatchFrames(q, "qid", "__qtext")
+          .withColumnRenamed("score", "ts")
+        // the ONE fact-sized score join: exact arm = sparse text scores
+        // into dense vector pairs (left); probe arm = sparse ∪ sparse
+        // (full outer) — misses on either side restored to the dense
+        // contract's 0.0
+        val joined0 =
+          if (exactArm)
+            vs.join(ts, Seq("qid", "id"), "left")
+              .select(col("qid"), col("id"),
+                coalesce(col("ts"), lit(0.0)).as("ts"), col("vs"))
+          else
+            vs.join(ts, Seq("qid", "id"), "full_outer")
+              .select(col("qid"), col("id"),
+                coalesce(col("ts"), lit(0.0)).as("ts"),
+                coalesce(col("vs"), lit(0.0)).as("vs"))
+        val joined = joined0.persist(StorageLevel.MEMORY_AND_DISK)
+        hybridCache = Some(joined) // released on the next hybrid call / add
+        val maxes = joined.groupBy(col("qid"))
+          .agg(max(col("ts")).as("__tm"), max(col("vs")).as("__vm"))
+        joined.join(broadcast(maxes), Seq("qid"))
+          .select(col("qid"), col("id"),
+            (lit(vectorWeight) *
+               when(col("__vm") > 0, col("vs") / col("__vm")).otherwise(col("vs")) +
+             lit(1.0 - vectorWeight) *
+               when(col("__tm") > 0, col("ts") / col("__tm")).otherwise(col("ts"))).as("score"))
+    }
   }
 
   /** Batch analog of [[searchTopK]]'s index dispatch (no filter arm —
@@ -818,6 +871,58 @@ object VectorDatabase {
     StructField("doc", StringType, nullable = false),
     StructField("vector", ArrayType(FloatType, containsNull = false), nullable = false),
     StructField("meta", StringType, nullable = false)))
+
+  /** The in-task arm's per-query fusion ([[VectorDatabase.hybridPool]]),
+    * replaying the relational arm's Catalyst arithmetic in doubles: BM25
+    * from the broadcast index, the pool (vector candidates with their
+    * text score or 0.0; on the probe arm also text-only docs with vs 0.0;
+    * a null vs stays null on the exact arm, as the left join keeps it),
+    * the maxes under Spark's order (NaN greatest, nulls skipped), and
+    * w·(vs/vm) + (1−w)·(ts/tm) behind Spark's `> 0` guards, where NaN
+    * counts as positive. Candidate ids are non-null (collection schema)
+    * and unique per query. */
+  private final class HybridFuse(text: org.apache.spark.broadcast.Broadcast[BM25.Compact],
+                                 w: Double, dense: Boolean)
+      extends ((Seq[Row], Seq[String]) => Seq[(Long, java.lang.Double)]) with Serializable {
+    @transient private lazy val scorer = new BM25.Scorer(text.value)
+
+    def apply(cands: Seq[Row], texts: Seq[String]): Seq[(Long, java.lang.Double)] = {
+      val c = text.value
+      scorer.score(texts)
+      val slots = cands.map(r => c.slotOf(r.getLong(0)))
+      val taken = slots.toSet
+      def ts(slot: Int): Double = if (scorer.matches(slot)) scorer.scoreOf(slot) else 0.0
+      // (id, ts, vs): the vector candidates, then the probe arm's text-only docs
+      val pool: Seq[(Long, Double, java.lang.Double)] =
+        cands.zip(slots).map { case (r, slot) =>
+          (r.getLong(0), ts(slot),
+            if (!r.isNullAt(1)) java.lang.Double.valueOf(r.getDouble(1))
+            else if (dense) null else java.lang.Double.valueOf(0.0))
+        } ++ (if (dense) Nil else scorer.matched.filterNot(taken).map(s =>
+          (c.ids(s), ts(s), java.lang.Double.valueOf(0.0))))
+      val tm = HybridFuse.greatest(pool.map(_._2))
+      val vm = HybridFuse.greatest(pool.flatMap(p => Option(p._3).map(_.doubleValue)))
+      pool.map { case (id, t, v) =>
+        (id, if (v == null) null else java.lang.Double.valueOf(
+          w * HybridFuse.norm(v, vm) + (1.0 - w) * HybridFuse.norm(t, tm)))
+      }
+    }
+  }
+
+  private object HybridFuse {
+    /** Spark SQL's `>` on doubles: NaN above everything, −0.0 = 0.0. */
+    def gt(a: Double, b: Double): Boolean =
+      if (a.isNaN) !b.isNaN else !b.isNaN && a > b
+
+    /** Spark's `max`: the first of equal values kept; None when empty. */
+    def greatest(xs: Seq[Double]): Option[Double] = xs.reduceOption((a, b) => if (gt(b, a)) b else a)
+
+    /** `when(m > 0, x / m).otherwise(x)`; a null max fails the guard. */
+    def norm(x: Double, m: Option[Double]): Double = m match {
+      case Some(mx) if gt(mx, 0.0) => x / mx
+      case _ => x
+    }
+  }
 
   /** Collapse the union lineage after this many appends (streaming ingest
     * calls appendFrame once per micro-batch). */

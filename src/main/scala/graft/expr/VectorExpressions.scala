@@ -464,25 +464,7 @@ case class AdcFlatTables(child: Expression,
     val flat = new Array[Double](cens.length * m * kk)
     var c = 0
     while (c < cens.length) {
-      val cen = cens(c)
-      if (cen != null && cen.length >= dim) {
-        var s = 0
-        while (s < m) {
-          val book = codebooks(s)
-          var j = 0
-          while (j < book.length) {
-            val b = book(j)
-            var d = 0.0; var i = 0
-            while (i < subDim) {
-              val x = (q(s * subDim + i) - cen(s * subDim + i)) - b(i)
-              d += x * x; i += 1
-            }
-            flat(c * m * kk + s * kk + j) = d
-            j += 1
-          }
-          s += 1
-        }
-      }
+      AdcFlatTables.fill(flat, c * m * kk, q, cens(c), codebooks, kk, subDim)
       c += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(flat)
@@ -490,6 +472,78 @@ case class AdcFlatTables(child: Expression,
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object AdcFlatTables {
+  /** Writes one cluster's m·kk block at `base`: entry s·kk + j =
+    * Σ_i ((q_i − cen_i) − book_i)², i ascending. A null or short centroid
+    * leaves the block zero. */
+  def fill(flat: Array[Double], base: Int, q: Array[Double], cen: Array[Double],
+           codebooks: Array[Array[Array[Double]]], kk: Int, subDim: Int): Unit =
+    if (cen != null && cen.length >= q.length) {
+      var s = 0
+      while (s < codebooks.length) {
+        val book = codebooks(s)
+        var j = 0
+        while (j < book.length) {
+          val b = book(j)
+          var d = 0.0; var i = 0
+          while (i < subDim) {
+            val x = (q(s * subDim + i) - cen(s * subDim + i)) - b(i)
+            d += x * x; i += 1
+          }
+          flat(base + s * kk + j) = d
+          j += 1
+        }
+        s += 1
+      }
+    }
+}
+
+/** [[AdcFlatTables]] for the probed clusters only: block p (m·kk entries)
+  * is the table of cluster `probed(p)`, in `probed` order, with the same
+  * entry arithmetic. A corpus row finds its block as its cluster's
+  * position in `probed` (`array_position` − 1) and passes that slot to
+  * [[AdcLookupSum]] as the cluster; rows of unprobed clusters have no
+  * slot. nprobe·m·kk doubles per query instead of nlist·m·kk. */
+case class AdcProbedTables(left: Expression, right: Expression,
+                           centroids: Array[Array[Double]],
+                           codebooks: Array[Array[Array[Double]]])
+    extends BinaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  override def prettyName: String = "adc_probed_tables"
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(t, _), ArrayType(IntegerType, _)) if t == FloatType || t == DoubleType =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (ARRAY<FLOAT|DOUBLE>, ARRAY<INT>) args, got " +
+        s"(${l.simpleString}, ${r.simpleString})")
+  }
+
+  override def nullSafeEval(v: Any, p: Any): Any = {
+    val arr = v.asInstanceOf[ArrayData]
+    val probed = p.asInstanceOf[ArrayData]
+    val isF = left.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    val m = codebooks.length
+    val kk = codebooks.map(_.length).max
+    val dim = math.min(arr.numElements(), codebooks.map(_.head.length).sum)
+    val q = Array.tabulate(dim)(i =>
+      if (isF) arr.getFloat(i).toDouble else arr.getDouble(i))
+    val flat = new Array[Double](probed.numElements() * m * kk)
+    var slot = 0
+    while (slot < probed.numElements()) {
+      val c = probed.getInt(slot)
+      if (c >= 0 && c < centroids.length)
+        AdcFlatTables.fill(flat, slot * m * kk, q, centroids(c), codebooks, kk, dim / m)
+      slot += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(flat)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
 }
 
 /** Σ_s tables[cluster·m·kk + s·kk + code_s] — the per-row ADC distance as
@@ -668,6 +722,9 @@ object VectorExpr {
   def adcFlatTables(q: Column, centroids: Array[Array[Double]],
                     codebooks: Array[Array[Array[Double]]]): Column =
     c(AdcFlatTables(x(q), centroids, codebooks))
+  def adcProbedTables(q: Column, probed: Column, centroids: Array[Array[Double]],
+                      codebooks: Array[Array[Array[Double]]]): Column =
+    c(AdcProbedTables(x(q), x(probed), centroids, codebooks))
   def adcLookupSum(codes: Column, cluster: Column, tables: Column, m: Int, kk: Int): Column =
     c(AdcLookupSum(x(codes), x(cluster), x(tables), m, kk))
   def nearestClusters(q: Column, centroids: Array[(Int, Array[Double])], nprobe: Int): Column =

@@ -21,9 +21,10 @@ import org.apache.spark.storage.StorageLevel
   * codes-only pass, float-reranked. Every rung computes d̂ as one per-row
   * fold over a flat ADC table ([[flatAdc]]'s layout): the exact rung and
   * the single-query [[search]] ship it in a task closure; the
-  * broadcast-batch [[searchBatch]] arm carries it per query row via the
-  * AdcFlatTables expression with the probed-cluster restriction as an
-  * array_contains filter (round 18, VERDICT #7). Only the
+  * broadcast-batch [[searchBatch]] arm carries the probed clusters'
+  * blocks of it per query row (the AdcProbedTables expression), and a
+  * row's slot in the probed list both restricts and indexes the lookup
+  * (round 18, VERDICT #7). Only the
   * corpus-scale-batch arm (broadcastQueries = false) keeps the relational
   * (cluster, s, code) join, where a cross join would be |corpus| × |Q|.
   *
@@ -198,16 +199,16 @@ final class ResidualPQ(val codes: DataFrame, // (id, cluster, codes, err)
     val dist =
       if (broadcastQueries) {
         // Round 18 (VERDICT #7): each broadcast query row carries its
-        // probed-cluster set AND its flat ADC table (the [[flatAdc]]
-        // layout, built by the AdcFlatTables expression — same arithmetic,
-        // same order), so the per-(row, query) distance is one codegen'd
-        // O(m) lookup fold behind an array_contains(probed, cluster)
-        // filter. The old shape exploded the codes m-fold, joined a
-        // per-(query, cluster) table frame and re-keyed through a
-        // groupBy(qid, id) Exchange; the probed restriction now rides the
-        // filter instead of the join keys. Probed SET selection is the
-        // same (cd2 asc, cluster asc) total order as the TopKPerKey rank
-        // it replaces.
+        // probed-cluster set AND the ADC tables of those clusters only
+        // (the [[flatAdc]] entry arithmetic, one m·kk block per probed
+        // cluster in `__probed` order — AdcProbedTables), so the
+        // per-(row, query) distance is one codegen'd O(m) lookup fold at
+        // the row's slot: its cluster's position in `__probed`, which also
+        // drops rows of unprobed clusters. The old shape exploded the
+        // codes m-fold, joined a per-(query, cluster) table frame and
+        // re-keyed through a groupBy(qid, id) Exchange. Probed SET
+        // selection is the same (cd2 asc, cluster asc) total order as the
+        // TopKPerKey rank it replaces.
         val kk = codebooks.map(_.length).max
         val cenDense = {
           val a = new Array[Array[Double]](centroids.map(_._1).max + 1)
@@ -217,13 +218,14 @@ final class ResidualPQ(val codes: DataFrame, // (id, cluster, codes, err)
         val qt = q
           .withColumn("__probed",
             graft.expr.VectorExpr.nearestClusters(col("__qv"), centroids, nprobe))
-          .withColumn("__adc",
-            graft.expr.VectorExpr.adcFlatTables(col("__qv"), cenDense, codebooks))
+          .withColumn("__adc", graft.expr.VectorExpr.adcProbedTables(
+            col("__qv"), col("__probed"), cenDense, codebooks))
+        val slot = (array_position(col("__probed"), col("cluster").cast("int")) - 1).cast("int")
         codes.crossJoin(broadcast(qt))
-          .where(array_contains(col("__probed"), col("cluster").cast("int")))
+          .where(slot >= 0)
           .select(col("qid"), col("id"),
             graft.expr.VectorExpr.adcLookupSum(col("codes").cast("array<int>"),
-              col("cluster").cast("int"), col("__adc"), m, kk).as("dist"))
+              slot, col("__adc"), m, kk).as("dist"))
       } else {
         // corpus-scale-batch arm: a cross join is |corpus| × |Q| — keep the
         // relational ADC (probed pairs + table grid on the join keys,

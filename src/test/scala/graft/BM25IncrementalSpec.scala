@@ -57,6 +57,30 @@ class BM25IncrementalSpec extends AnyFunSuite {
     chained.dispose()
   }
 
+  test("a chain of 10 appends equals the full rebuild; docFreq's plan stays one node deep") {
+    // append's df merge names the previous docFreq twice; exposed as is,
+    // docFreq's plan doubled per append (OOM by the 7th at -Xmx4g)
+    var ix = BM25.build(docs.where(col("doc_id") < 200), "doc_id", "text")
+    val nodes = (0 until 10).map { i =>
+      val lo = 200 + 30 * i
+      val batch =
+        if (i == 9) docs.where(col("doc_id") >= lo)
+        else docs.where(col("doc_id") >= lo && col("doc_id") < lo + 30)
+      ix = ix.append(batch, "doc_id", "text")
+      PlanNodes.logical(ix.docFreq)
+    }
+    assert(nodes.forall(_ <= nodes.head) && nodes.head <= 2, s"docFreq plan nodes per append: $nodes")
+    assert(ix.n == full.n && ix.totalDl == full.totalDl && ix.avgdl == full.avgdl)
+    assert(math.abs(ix.avgIdf - full.avgIdf) < 1e-12)
+    assert(ix.docFreq.exceptAll(full.docFreq).isEmpty && full.docFreq.exceptAll(ix.docFreq).isEmpty)
+    def rows(i: BM25.Index) = i.score(Queries.bm25Query)
+      .select(col("id"), round(col("score"), 9).as("s"))
+      .orderBy(col("s").desc, col("id").asc).limit(20)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(rows(ix) == rows(full))
+    ix.dispose()
+  }
+
   test("appending an empty batch is the identity on statistics") {
     val same = full.append(docs.where(col("doc_id") < 0), "doc_id", "text")
     assert(same.n == full.n && same.totalDl == full.totalDl &&

@@ -228,6 +228,53 @@ class PlanShapeSpec extends AnyFunSuite {
       s"corpus index shuffled by an incremental batch:\n$p")
   }
 
+  test("hybridSearchBatch in-task arm: no full-outer pair join, no cached pair frame, fewer jobs") {
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    import spark.implicits._
+    // an ivfpq collection on the ADC probe arm (the batch workload's
+    // 1,200 docs pass the default exactThreshold; these 400 are forced)
+    val rnd = new scala.util.Random(7)
+    val dim = 16
+    val words = Seq("ember", "quartz", "delta", "maple", "orbit", "cinder", "lumen")
+    val vs = Seq.fill(400)(Array.fill(dim)(rnd.nextFloat()))
+    val db = VectorDatabase.create(spark, dim, "ivfpq", ivfClusters = 8, pqCodeSize = 4,
+      efSearch = 10)
+    db.add(vs.indices.map(i => s"doc$i ${words(i % 7)} ${words((i / 7) % 7)}"), vs, None)
+    val qdf = (0L until 20L).map(i => (i, s"${words(i.toInt % 7)} doc${i * 13}",
+      vs((i * 19 % 400).toInt).map(_.toDouble).toSeq)).toDF("qid", "qtext", "qv")
+    def call = db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 10, exactThreshold = 0L)
+    def fullOuter(df: org.apache.spark.sql.DataFrame) = PlanNodes.count(df) {
+      case j: SortMergeJoinExec => j.joinType == FullOuter
+      case j: ShuffledHashJoinExec => j.joinType == FullOuter
+    }
+    def pairCache(df: org.apache.spark.sql.DataFrame) = PlanNodes.count(df) {
+      case m: InMemoryTableScanExec => m.output.map(_.name).toSet.contains("ts")
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val (relational, relationalJobs) =
+      try {
+        spark.conf.set(key, "-1")
+        val df = call
+        val (rows, jobs) = PlanNodes.jobs(spark)(df.collect())
+        assert(fullOuter(df) >= 1 && pairCache(df) >= 1, "the counter misses the relational arm's shape")
+        (rows.toSeq, jobs)
+      } finally spark.conf.set(key, prev)
+    // the first in-task call also builds the broadcast text index
+    val ((inTask, rows), firstJobs) = PlanNodes.jobs(spark) { val df = call; (df, df.collect()) }
+    assert(rows.toSeq.map(r => (r.getLong(0), r.getLong(1))) ==
+      relational.map(r => (r.getLong(0), r.getLong(1))))
+    assert(fullOuter(inTask) == 0, "in-task arm planned a full-outer pair join")
+    assert(pairCache(inTask) == 0, "in-task arm cached the pair frame")
+    val (_, jobs) = PlanNodes.jobs(spark)(call.collect())
+    info(s"jobs per collect: relational $relationalJobs, in-task $firstJobs with the index build, then $jobs")
+    assert(firstJobs < relationalJobs && jobs < firstJobs,
+      s"jobs per collect: relational $relationalJobs, in-task $firstJobs first, then $jobs")
+    db.close()
+  }
+
   test("dedup_semantic_incremental: corpus rows stream through broadcast joins, never re-shuffled per batch") {
     import org.apache.spark.sql.functions.col
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")

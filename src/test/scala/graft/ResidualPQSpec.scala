@@ -145,6 +145,23 @@ class ResidualPQSpec extends AnyFunSuite {
     assert(recalls.sum / recalls.size >= 0.5, s"batch recall too low: $recalls")
   }
 
+  test("searchBatch rows are bit-identical to per-query search on the same probe set") {
+    // the broadcast arm builds ADC tables for the probed clusters only;
+    // entry arithmetic and the ascending-s fold are the single path's
+    val qids = Seq(3L, 42L, 77L, 123L)
+    val queries = emb.where(col("vec_id").isin(qids.map(Long.box): _*))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    for (np <- Seq(1, 3, 8)) {
+      val batch = rpq.searchBatch(queries, "qid", "qv", k = 7, nprobe = np)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      val single = qids.flatMap(qid =>
+        rpq.search(queryVec(qid), 7, nprobe = np).collect()
+          .map(r => (qid, r.getLong(0), r.getDouble(1))))
+      assert(batch.sortBy(r => (r._1, -r._3, r._2)) == single,
+        s"nprobe=$np: batch ${batch.sorted} != per-query ${single.sorted}")
+    }
+  }
+
   test("searchBatch: duplicate qids fail loudly instead of a nondeterministic pick") {
     import org.apache.spark.sql.functions.col
     // two DIFFERENT vectors under one qid — the round-12 dropDuplicates

@@ -299,8 +299,10 @@ class VectorDatabaseSpec extends AnyFunSuite {
     val qs = Seq((0L, "needle", bigVecs(7).map(_.toDouble).toSeq),
                  (1L, "common5 common17", bigVecs(123).map(_.toDouble).toSeq))
     val qdf = qs.toDF("qid", "qtext", "qv")
-    val batch = db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 5,
-        exactThreshold = 0L).collect()
+    // the relational arm (threshold −1) materializes its scatter in
+    // hybridCache; the in-task arm's pool is the same union, never cached
+    val batch = relationalArm(db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 5,
+        exactThreshold = 0L).collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // (2) the materialized scatter IS sparse: probed (≤100/query) ∪ text
     // matches — never the corpus×batch fill (dense = 600 rows here).
@@ -308,6 +310,9 @@ class VectorDatabaseSpec extends AnyFunSuite {
     // their (reference-faithful) dense N-row frames.
     val cached = db.hybridCache.get.count()
     assert(cached <= 250, s"scatter has $cached rows — dense would be ${n * qs.size}")
+    val pool = db.hybridPool(qdf, "qid", "qtext", "qv", 5, 0.5, 0L).count()
+    assert(db.hybridCache.isEmpty, "the in-task arm cached a pair frame")
+    assert(pool <= 250, s"in-task pool has $pool rows — dense would be ${n * qs.size}")
     // (1) bit-identical to the DENSE formulation: the single-query path
     // still materializes the reference's N-row zero-scatter (ldb:365–374)
     val single = qs.flatMap { case (qid, t, v) =>
@@ -321,6 +326,141 @@ class VectorDatabaseSpec extends AnyFunSuite {
     val plan = db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 5,
       exactThreshold = 0L).queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"dense cross survived:\n$plan")
+  }
+
+  private val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** Runs `body` with Spark's broadcast threshold at −1, which sends
+    * hybridSearchBatch to its relational arm (the reference the in-task
+    * arm is compared against). */
+  private def relationalArm[T](body: => T): T = {
+    val prev = spark.conf.get(thresholdKey)
+    spark.conf.set(thresholdKey, "-1")
+    try body finally spark.conf.set(thresholdKey, prev)
+  }
+
+  /** The in-task arm against the relational arm on the same call: same
+    * (qid, id) rows in the same order; scores bit-equal for queries of
+    * ≤ 2 distinct terms (a BM25 sum of two terms has one value in any
+    * order), within 1e-12 relative above. Also checks which arm ran:
+    * only the relational one leaves a cached pair frame. Returns the
+    * in-task rows. */
+  private def sameOnBothArms(db: VectorDatabase, texts: Map[Long, String])(
+      call: => org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] = {
+    def rows = call.collect().map(r =>
+      (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) Double.NaN else r.getDouble(2))).toSeq
+    val inTask = rows
+    assert(db.hybridCache.isEmpty, "in-task arm expected: a pair frame was cached")
+    val relational = relationalArm(rows)
+    assert(db.hybridCache.nonEmpty, "relational arm expected: no pair frame cached")
+    assert(inTask.map(r => (r._1, r._2)) == relational.map(r => (r._1, r._2)),
+      s"rows differ:\n in-task    $inTask\n relational $relational")
+    inTask.zip(relational).foreach { case ((qid, id, a), (_, _, b)) =>
+      val terms = texts.get(qid).map(graft.text.BM25.tokenizeQuery(_).distinct.length).getOrElse(0)
+      if (terms <= 2)
+        assert(java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b),
+          s"($qid, $id): in-task $a != relational $b")
+      else
+        assert(a == b || math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b)),
+          s"($qid, $id): in-task $a vs relational $b")
+    }
+    inTask
+  }
+
+  private def queryFrame(qs: Seq[(Long, String, Seq[Double])]) = {
+    import spark.implicits._
+    qs.toDF("qid", "qtext", "qv")
+  }
+
+  test("hybridSearchBatch in-task arm = relational arm: flat, dense exact and probe arms, filter, restrict") {
+    val db = freshDb("flat")
+    val qs = Seq((0L, "vector databases", vecs(2).map(_.toDouble).toSeq),
+                 (1L, "python programming language", vecs(3).map(_.toDouble).toSeq),
+                 (2L, "the quick brown fox", vecs(1).map(_.toDouble).toSeq),
+                 (3L, "zebra unicorn", vecs(0).map(_.toDouble).toSeq), // no corpus term
+                 (4L, "", vecs(4).map(_.toDouble).toSeq))             // empty text
+    val texts = qs.map(q => q._1 -> q._2).toMap
+    val qdf = queryFrame(qs)
+    val mask = Some(db.metaValue("priority") === lit("\"high\""))
+    import spark.implicits._
+    val allow = Seq((0L, 1L), (0L, 2L), (1L, 0L), (1L, 1L), (2L, 3L)).toDF("qid", "id")
+    for (thr <- Seq(1000L, 0L); w <- Seq(0.0, 0.5, 1.0)) {
+      val all = sameOnBothArms(db, texts)(db.hybridSearchBatch(qdf, "qid", "qtext", "qv",
+        topK = 5, vectorWeight = w, exactThreshold = thr))
+      assert(all.map(_._1).toSet.contains(3L) == (w > 0)) // vector side only
+      sameOnBothArms(db, texts)(db.hybridSearchBatch(qdf, "qid", "qtext", "qv",
+        topK = 3, vectorWeight = w, exactThreshold = thr, filter = mask))
+      sameOnBothArms(db, texts)(db.hybridSearchBatch(qdf, "qid", "qtext", "qv",
+        topK = 5, vectorWeight = w, exactThreshold = thr, restrict = Some(allow)))
+    }
+  }
+
+  test("hybridSearchBatch in-task arm = relational arm: all-negative idf (tm <= 0) and NaN query vectors") {
+    // every doc holds both terms: raw idf < 0 for the whole vocabulary, so
+    // the epsilon floor is negative and every text score is too
+    val db = VectorDatabase.create(spark, dim, "flat")
+    val vs6 = Seq.fill(6)(vec())
+    db.add(Seq.tabulate(6)(i => if (i % 2 == 0) "alpha beta" else "beta alpha alpha"), vs6, None)
+    val nan = Seq.fill(dim)(Double.NaN)
+    val qs = Seq((0L, "alpha", vs6(1).map(_.toDouble).toSeq),
+                 (1L, "alpha beta", vs6(4).map(_.toDouble).toSeq),
+                 (2L, "beta", nan),
+                 (3L, "gamma", nan))
+    val texts = qs.map(q => q._1 -> q._2).toMap
+    def check(): Unit = for (thr <- Seq(1000L, 0L)) {
+      val got = sameOnBothArms(db, texts)(db.hybridSearchBatch(queryFrame(qs), "qid", "qtext", "qv",
+        topK = 4, exactThreshold = thr))
+      assert(got.exists(_._1 == 0L), s"threshold $thr: $got")
+    }
+    check()
+    // a NaN corpus vector makes vm NaN for finite queries too: Spark's
+    // `vm > 0` holds for NaN, so every fused score of such a query is NaN
+    db.add(Seq("alpha beta"), Seq(Array.fill(dim)(Float.NaN)), None)
+    check()
+  }
+
+  test("hybridSearchBatch in-task arm = relational arm: ivfpq ADC and exact hatch, graph, appended collection") {
+    val many = Seq.fill(60)(vec())
+    val words = Seq("red", "green", "blue", "amber", "violet")
+    val docsN = many.indices.map(i => s"item$i ${words(i % 5)} ${words((i * 3) % 5)} shade")
+    val qs = Seq((0L, "red shade", many(3).map(_.toDouble).toSeq),
+                 (1L, "item17 blue violet", many(17).map(_.toDouble).toSeq),
+                 (2L, "green", many(40).map(_.toDouble).toSeq))
+    val texts = qs.map(q => q._1 -> q._2).toMap
+    val qdf = queryFrame(qs)
+    for ((kind, ef) <- Seq(("ivfpq", 10), ("ivfpq", 40), ("hnsw", 8))) {
+      val db = VectorDatabase.create(spark, dim, kind, ivfClusters = 4, efSearch = ef, m = 4)
+      db.add(docsN, many, None)
+      sameOnBothArms(db, texts)(db.hybridSearchBatch(qdf, "qid", "qtext", "qv",
+        topK = 4, exactThreshold = 0L))
+      // append: the appended doc's unique term must reach the broadcast
+      // index the next call uses (a stale one would miss it)
+      val fresh = vec()
+      db.add(Seq("newcomer shade"), Seq(fresh), None)
+      val after = qs :+ ((9L, "newcomer", fresh.map(_.toDouble).toSeq))
+      val got = sameOnBothArms(db, after.map(q => q._1 -> q._2).toMap)(db.hybridSearchBatch(
+        queryFrame(after), "qid", "qtext", "qv", topK = 4, exactThreshold = 0L))
+      assert(got.find(_._1 == 9L).map(_._2).contains(60L), s"$kind ef=$ef: $got")
+      db.close()
+    }
+  }
+
+  test("text index broadcast: released when an append replaces the index and on close") {
+    val db = freshDb("flat")
+    val qs = Seq((0L, "vector databases", vecs(2).map(_.toDouble).toSeq))
+    db.hybridSearchBatch(queryFrame(qs), "qid", "qtext", "qv").collect()
+    val before = db.bm25IfBuilt.get
+    val first = before.compactIfBuilt.getOrElse(fail("the in-task arm did not build the index"))
+    assert(first.value.ids.length == 5)
+    db.add(Seq("one more doc"), Seq(vec()), None)
+    assert(before.compactIfBuilt.isEmpty, "the replaced index kept its broadcast")
+    intercept[org.apache.spark.SparkException](first.value)
+    db.hybridSearchBatch(queryFrame(qs), "qid", "qtext", "qv").collect()
+    val second = db.bm25IfBuilt.flatMap(_.compactIfBuilt)
+      .getOrElse(fail("the appended index did not build its own"))
+    assert(second.value.ids.length == 6)
+    db.close()
+    intercept[org.apache.spark.SparkException](second.value)
   }
 
   test("batch ivfpq arm probes the SAME per-query IVF candidate set as the single path (r9 ADVICE)") {
